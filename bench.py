@@ -252,7 +252,7 @@ def main() -> None:
     #
     # VERDICT r9 #2b (measurement-visibility fix, not a methodology
     # change — the timed numbers above are untouched): additionally
-    # emit the per-query map as MANY self-contained sub-700-byte
+    # emit the per-query map as MANY self-contained sub-1KB
     # "per_query_chunk" JSON lines, sorted by query name, immediately
     # before the final compact summary. Rationale: a 2KB tail can only
     # ever hold ~45 per-query entries, so chunking cannot make ALL of
@@ -288,7 +288,9 @@ def main() -> None:
     chunks: list[dict[str, float]] = []
     for name in sorted(timings):
         chunk[name] = timings[name]
-        # ~25 bytes/entry: 24 entries keeps every line well under 700B
+        # entries average ~28 bytes and reach ~40 with long query
+        # names: 24 entries make ~740-byte lines (BENCH_r10), at most
+        # ~1 KB — each line still fits the 2 KB tail on its own
         if len(chunk) == 24:
             chunks.append(chunk)
             chunk = {}

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ksql_query_tutorial_spark.operators.cumsum import hierarchical_cumsum
+
 
 def props_stats(
     df: DataFrame,
@@ -1660,11 +1662,8 @@ def session_concurrency(
     Scale design: the same ONE user-keyed exchange as session_stats
     sessionizes the stream; boundaries collapse to one row per
     DISTINCT microsecond instant (groupBy, map-side partials); the
-    running sum over instants is a HIERARCHICAL prefix sum in the
-    pack_sequences mold — intra-block cumulative window partitioned by
-    hour block (parallel), per-block totals, exclusive cumsum over the
-    tiny block table only, broadcast back — never one global
-    single-partition window over the corpus timeline.
+    running sum over instants is a :func:`hierarchical_cumsum` over
+    hour blocks.
 
     Returns ``day, n_starts, peak_concurrency`` ordered by day, one
     row per day with ≥1 session start.
@@ -1700,27 +1699,12 @@ def session_concurrency(
         F.sum("d").alias("net"),
         F.sum(F.when(F.col("d") == 1, 1).otherwise(0)).alias("starts"),
     )
-    blk = (F.col("t") / F.lit(CONC_BLOCK_US)).cast("long")
-    base = inst.withColumn("__blk", blk)
-    intra_w = (
-        Window.partitionBy("__blk")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = base.withColumn("__cum_in", F.sum("net").over(intra_w))
-    blk_w = Window.orderBy("__blk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    blk_off = (
-        base.groupBy("__blk")
-        .agg(F.sum("net").alias("__tot"))
-        .withColumn(
-            "__off", F.coalesce(F.sum("__tot").over(blk_w), F.lit(0))
-        )
-        .select("__blk", "__off")
-    )
-    cum = local.join(F.broadcast(blk_off), "__blk").withColumn(
-        "__conc", F.col("__off") + F.col("__cum_in")
+    cum = hierarchical_cumsum(
+        inst,
+        block=(F.col("t") / F.lit(CONC_BLOCK_US)).cast("long"),
+        order=["t"],
+        sums={"__conc": "net"},
+        inclusive=True,
     )
     return (
         cum.filter(F.col("starts") > 0)
@@ -2771,13 +2755,9 @@ def sprt_conversion(
     on identical integers in any engine, instead of a float cumsum
     whose rounding path could flip a boundary comparison.
 
-    Scale design: the prefix counts use the hierarchical pattern
-    (``pack_sequences`` precedent) — intra-hour window partitioned by
-    (arm, hour) runs parallel across the calendar, per-hour totals
-    (a tiny |arms|·|hours| frame) carry the running offset, broadcast
-    back. No single-reducer global sort at any corpus size; a live
-    deployment runs the same integer-count recurrence incrementally in
-    the streaming layer.
+    Scale design: the prefix counts are a :func:`hierarchical_cumsum`
+    per arm over hour blocks; a live deployment runs the same
+    integer-count recurrence incrementally in the streaming layer.
 
     Returns one row per arm: ``arm, n_events, n_conversions,
     llr_final, first_cross_n, decision`` (``first_cross_n`` = 0 when
@@ -2798,38 +2778,14 @@ def sprt_conversion(
         F.col(id_col).alias("__eid"),
         F.when(F.col(type_col) == conversion_type, F.lit(1))
         .otherwise(F.lit(0)).cast("long").alias("__x"),
-        F.date_trunc("hour", F.col(ts_col)).alias("__blk"),
     )
-
-    intra = (
-        Window.partitionBy("arm", "__blk")
-        .orderBy("__ts", "__eid")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = base.select(
-        "arm", "__blk", "__x",
-        F.sum("__x").over(intra).alias("__lc"),
-        F.count(F.lit(1)).over(intra).alias("__ln"),
-    )
-
-    blk_w = (
-        Window.partitionBy("arm").orderBy("__blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        base.groupBy("arm", "__blk")
-        .agg(F.sum("__x").alias("__bc"), F.count(F.lit(1)).alias("__bn"))
-        .select(
-            "arm", "__blk",
-            F.coalesce(F.sum("__bc").over(blk_w), F.lit(0)).alias("__oc"),
-            F.coalesce(F.sum("__bn").over(blk_w), F.lit(0)).alias("__on"),
-        )
-    )
-
-    cum = local.join(F.broadcast(offsets), ["arm", "__blk"]).select(
-        "arm",
-        (F.col("__oc") + F.col("__lc")).alias("cum_c"),
-        (F.col("__on") + F.col("__ln")).alias("cum_n"),
+    cum = hierarchical_cumsum(
+        base,
+        block=F.date_trunc("hour", F.col("__ts")),
+        order=["__ts", "__eid"],
+        sums={"cum_c": "__x", "cum_n": F.lit(1)},
+        partition=["arm"],
+        inclusive=True,
     )
     llr = (
         F.col("cum_c").cast("double") * F.lit(la)
@@ -3062,12 +3018,9 @@ def mann_whitney_value(
     Scale design: per-user rollup (one user-keyed exchange with
     map-side partials) collapses to |users| rows; the distinct-value
     frame after the second rollup is ≤ |users| rows. The
-    strictly-below-B cumulative uses the hierarchical prefix-sum
-    pattern (``sprt_conversion`` precedent): intra-bucket window
-    partitioned by a value bucket (exact integer floor-division via
-    ``pmod``) runs parallel across buckets, per-bucket totals (a tiny
-    frame) carry the running offset via a broadcast join — no
-    single-reducer global sort at any corpus size.
+    strictly-below count is an exclusive :func:`hierarchical_cumsum`
+    over value buckets (exact, negative-safe integer floor division
+    via ``pmod``).
 
     Returns one row: ``n_a, n_b, twice_u_a, n_tied_groups, z,
     effect_r`` (twice_u_a = 2·U_A exact; n_tied_groups = distinct
@@ -3093,40 +3046,21 @@ def mann_whitney_value(
         F.sum((F.col("arm") == 0).cast("long")).alias("na"),
         F.sum((F.col("arm") == 1).cast("long")).alias("nb"),
     )
-    # exact integer floor division (negative-safe) for the bucket key
-    blk = ((F.col("m") - F.pmod(F.col("m"), F.lit(bucket_w)))
-           / F.lit(bucket_w)).cast("long")
-    vals = vals.withColumn("__blk", blk)
-
-    intra = (
-        Window.partitionBy("__blk")
-        .orderBy("m")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = vals.withColumn(
-        "__lb", F.coalesce(F.sum("nb").over(intra), F.lit(0))
-    )
-    blk_w = (
-        Window.orderBy("__blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        vals.groupBy("__blk")
-        .agg(F.sum("nb").alias("__bn"))
-        .select(
-            "__blk",
-            F.coalesce(F.sum("__bn").over(blk_w), F.lit(0)).alias("__ob"),
-        )
+    below = hierarchical_cumsum(
+        vals,
+        block=((F.col("m") - F.pmod(F.col("m"), F.lit(bucket_w)))
+               / F.lit(bucket_w)).cast("long"),
+        order=["m"],
+        sums={"__below": "nb"},
+        inclusive=False,
     )
     t = (F.col("na") + F.col("nb")).cast("decimal(38,0)")
     stats = (
-        local.join(F.broadcast(offsets), "__blk")
-        .agg(
+        below.agg(
             F.sum("na").cast("long").alias("n_a"),
             F.sum("nb").cast("long").alias("n_b"),
             F.sum(
-                F.col("na") * (2 * (F.col("__ob") + F.col("__lb"))
-                               + F.col("nb"))
+                F.col("na") * (2 * F.col("__below") + F.col("nb"))
             ).cast("long").alias("twice_u_a"),
             F.sum(
                 ((F.col("na") + F.col("nb")) > 1).cast("long")

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ksql_query_tutorial_spark import cache
+from ksql_query_tutorial_spark.operators.cumsum import hierarchical_cumsum
 from ksql_query_tutorial_spark.operators.dedup import shingles_of
 from ksql_query_tutorial_spark.operators.text import tokens
 
@@ -49,50 +50,25 @@ def pack_sequences(
     fixed ``budget``-token context windows (documents may straddle a
     cut — exactly how GPT-style pretraining packs its batches).
 
-    Scale design — the global running token offset is a HIERARCHICAL
-    prefix sum, not one global window (a single-partition
-    ``Window.orderBy`` serializes the whole corpus through one task):
-
-    1. intra-block exclusive cumsum, window partitioned by
-       ``block = id div PACK_BLOCK`` (parallel across blocks);
-    2. per-block totals (groupBy — tiny: corpus_rows / PACK_BLOCK);
-    3. exclusive cumsum OVER BLOCKS (single-partition window over the
-       tiny block table only);
-    4. broadcast the block offsets back.
+    The running token offset is a :func:`hierarchical_cumsum` over
+    ``id div PACK_BLOCK`` blocks.
 
     Returns one row per document: ``doc_id, n_tokens, begin_offset,
     pack_id, pack_end, straddles`` where ``pack_id``/``pack_end`` are
     the first/last context windows the document touches.
     """
-    n_tok = F.size(tokens(F.col(text_col)))
     base = df.select(
         F.col(id_col).alias("doc_id"),
-        n_tok.cast("long").alias("n_tokens"),
-        (F.col(id_col).cast("long") / F.lit(PACK_BLOCK)).cast("long").alias("__blk"),
+        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"),
     )
-
-    intra_w = (
-        Window.partitionBy("__blk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = base.withColumn(
-        "__local", F.coalesce(F.sum("n_tokens").over(intra_w), F.lit(0))
-    )
-
-    blk_w = (
-        Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    blk_offsets = (
-        base.groupBy("__blk")
-        .agg(F.sum("n_tokens").alias("__blk_total"))
-        .withColumn("__blk_off", F.coalesce(F.sum("__blk_total").over(blk_w), F.lit(0)))
-        .select("__blk", "__blk_off")
-    )
-
-    packed = (
-        local.join(F.broadcast(blk_offsets), "__blk")
-        .withColumn("begin_offset", F.col("__blk_off") + F.col("__local"))
+    return (
+        hierarchical_cumsum(
+            base,
+            block=(F.col("doc_id").cast("long") / F.lit(PACK_BLOCK)).cast("long"),
+            order=["doc_id"],
+            sums={"begin_offset": "n_tokens"},
+            inclusive=False,
+        )
         .withColumn("pack_id", (F.col("begin_offset") / budget).cast("long"))
         .withColumn(
             "pack_end",
@@ -100,9 +76,6 @@ def pack_sequences(
              / budget).cast("long"),
         )
         .withColumn("straddles", F.col("pack_end") > F.col("pack_id"))
-    )
-    return packed.select(
-        "doc_id", "n_tokens", "begin_offset", "pack_id", "pack_end", "straddles"
     )
 
 
@@ -977,18 +950,9 @@ def shuffle_positions(
     ``(sample_hash(id), id)`` — the reproducible analog of "shuffle the
     dataset once before training".
 
-    A naive ``row_number() OVER (ORDER BY u)`` collapses to ONE
-    partition (the whole corpus through a single task). This is the
-    hierarchical two-level rank instead (same trick as
-    :func:`pack_sequences`):
-
-    1. range-bucket each row by ``u DIV (mod/n_buckets)`` — buckets
-       partition the sort domain, so bucket order == global order;
-    2. per-bucket counts (one tiny groupBy on a bounded domain) →
-       running offsets via a window over ``n_buckets`` rows, broadcast
-       back;
-    3. position = bucket offset + (row_number within bucket) - 1;
-       the per-bucket window sees ~N/n_buckets rows per task.
+    A plain ``row_number() OVER (ORDER BY u)`` runs in ONE task; the
+    position is an exclusive :func:`hierarchical_cumsum` count over
+    ``u DIV (mod/n_buckets)`` range buckets instead.
 
     ``n_buckets`` must divide ``_HASH_MOD``; size it ~10× parallelism
     at scale (hash keys distribute uniformly, so buckets are balanced
@@ -1000,20 +964,13 @@ def shuffle_positions(
     keyed = df.select(
         F.col(id_col),
         sample_hash(F.col(id_col)).alias("u"),
-    ).withColumn("__b", (F.col("u") - F.pmod(F.col("u"), width)) / width)
-    keyed = keyed.withColumn("__b", F.col("__b").cast("int"))
-    counts = keyed.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
-    woff = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(woff), F.lit(0))
-    ).select("__b", "__off")
-    win = Window.partitionBy("__b").orderBy(F.col("u").asc(), F.col(id_col).asc())
-    return (
-        keyed.join(F.broadcast(offsets), "__b")
-        .withColumn(
-            "shuffle_pos", (F.col("__off") + F.row_number().over(win) - 1).cast("long")
-        )
-        .select(id_col, "u", "shuffle_pos")
+    )
+    return hierarchical_cumsum(
+        keyed,
+        block=((F.col("u") - F.pmod(F.col("u"), width)) / width).cast("int"),
+        order=[F.col("u").asc(), F.col(id_col).asc()],
+        sums={"shuffle_pos": F.lit(1)},
+        inclusive=False,
     )
 
 
@@ -1258,8 +1215,6 @@ def domain_cap(
     id_col: str = "doc_id",
     domain_col: str = "source",
     n_buckets: int = DOMAIN_CAP_BUCKETS,
-    rank_all: bool = True,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """C4/RefinedWeb-style per-domain frequency capping: keep at most
     ``cap`` documents per ``domain_col``, chosen by a DETERMINISTIC
@@ -1267,28 +1222,10 @@ def domain_cap(
     set is a pure function of the input — stable under re-runs and
     task retries, unlike ``rand()``-ordered capping.
 
-    Skew design — a plain ``row_number() OVER (PARTITION BY domain)``
-    funnels each domain through ONE task; at 100 TB a mega-domain
-    (one host contributing billions of pages) serializes the stage.
-    This is the hierarchical two-level rank of
-    :func:`shuffle_positions` applied per group:
-
-    1. sub-bucket each row by its hash variate: ``bucket = u DIV
-       (mod/n_buckets)`` — hash order makes bucket order == priority
-       order within the domain;
-    2. per-(domain, bucket) counts (one groupBy; ≤ |domains|·n_buckets
-       non-empty rows) → exclusive running offsets via a window over
-       the tiny counts table;
-    3. rank = offset + row_number within (domain, bucket) — each
-       window task sees ~|domain|/n_buckets rows.
-
-    ``broadcast_offsets`` hints the offsets join; disable it when the
-    domain universe is huge (millions of URL hosts) and let the
-    (domain, bucket)-keyed shuffle join distribute it. ``rank_all=
-    False`` is the cheap destructive-scale path: buckets whose offset
-    already ≥ ``cap`` can contain no survivors, so their rows skip the
-    window entirely (``dom_rank`` NULL, ``kept`` false) — only the
-    ~cap head rows per domain pay for exact ranks.
+    A plain ``row_number() OVER (PARTITION BY domain)`` funnels each
+    domain through ONE task; the rank is an inclusive
+    :func:`hierarchical_cumsum` count per domain over ``u DIV
+    (mod/n_buckets)`` sub-buckets instead.
 
     Emits EVERY input row (flag, not destructive): ``doc_id,
     <domain>, u, dom_rank, kept`` with 1-based ``dom_rank``.
@@ -1296,50 +1233,20 @@ def domain_cap(
     if _HASH_MOD % n_buckets != 0:
         raise ValueError(f"n_buckets must divide {_HASH_MOD}")
     width = _HASH_MOD // n_buckets
-    keyed = (
-        df.select(
-            F.col(id_col),
-            F.col(domain_col),
-            sample_hash(F.col(id_col)).alias("u"),
-        )
-        .withColumn("__b", ((F.col("u") - F.pmod(F.col("u"), F.lit(width))) / width)
-                    .cast("int"))
+    keyed = df.select(
+        F.col(id_col),
+        F.col(domain_col),
+        sample_hash(F.col(id_col)).alias("u"),
     )
-    counts = keyed.groupBy(domain_col, "__b").agg(F.count(F.lit(1)).alias("__n"))
-    woff = (
-        Window.partitionBy(domain_col)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    ranked = hierarchical_cumsum(
+        keyed,
+        block=((F.col("u") - F.pmod(F.col("u"), F.lit(width))) / width).cast("int"),
+        order=[F.col("u").asc(), F.col(id_col).asc()],
+        sums={"dom_rank": F.lit(1)},
+        partition=[domain_col],
+        inclusive=True,
     )
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(woff), F.lit(0))
-    ).select(domain_col, "__b", "__off")
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
-
-    win = Window.partitionBy(domain_col, "__b").orderBy(
-        F.col("u").asc(), F.col(id_col).asc()
-    )
-    joined = keyed.join(offsets, [domain_col, "__b"])
-    if rank_all:
-        ranked = joined.withColumn(
-            "dom_rank", (F.col("__off") + F.row_number().over(win)).cast("long")
-        )
-    else:
-        head = joined.filter(F.col("__off") < cap).withColumn(
-            "dom_rank", (F.col("__off") + F.row_number().over(win)).cast("long")
-        )
-        tail = joined.filter(F.col("__off") >= cap).withColumn(
-            "dom_rank", F.lit(None).cast("long")
-        )
-        ranked = head.unionByName(tail)
-    return ranked.select(
-        id_col,
-        domain_col,
-        "u",
-        "dom_rank",
-        F.coalesce(F.col("dom_rank") <= cap, F.lit(False)).alias("kept"),
-    )
+    return ranked.withColumn("kept", F.col("dom_rank") <= cap)
 
 
 def snapshot_diff(

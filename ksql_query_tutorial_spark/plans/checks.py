@@ -87,41 +87,60 @@ def assert_wholestage_codegen(df: DataFrame) -> None:
     )
 
 
-def count_physical_nodes(df: DataFrame, node_name: str) -> int:
-    """Structurally count physical-plan nodes whose ``nodeName`` equals
-    ``node_name`` ("Generate", "BroadcastHashJoin", ...) by walking the
-    plan TREE via py4j — robust to explain-formatter changes that break
-    plan-string substring pins (ADVICE r7). Descends into AQE wrappers
-    (``AdaptiveSparkPlan``) and ``InMemoryTableScan`` cached relations,
-    so persisted subtrees are counted once per cache definition, not
-    per reference.
-    """
-    def walk(jnode) -> int:
-        name = jnode.nodeName()
-        n = 1 if name == node_name else 0
-        if name == "AdaptiveSparkPlan":
-            return n + walk(jnode.executedPlan())
-        if name == "InMemoryTableScan":
-            try:
-                child = jnode.relation().cachedPlan()
-                return n + walk(child)
-            except Exception:
-                return n
-        kids = jnode.children()
-        for i in range(kids.size()):
-            n += walk(kids.apply(i))
-        return n
+def _children(jnode) -> list:
+    """The children of a physical node for a structural walk, looking
+    through the wrappers that hide a subtree: ``AdaptiveSparkPlan``
+    (its current plan), every AQE ``*QueryStage`` (its ``plan()``;
+    once a query has run, its whole final plan sits under a leaf
+    ``ResultQueryStage``), ``ReusedExchange`` (the exchange it reuses)
+    and ``InMemoryTableScan`` (the cached relation's plan)."""
+    name = jnode.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [jnode.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [jnode.plan()]
+    if name == "ReusedExchange":
+        return [jnode.child()]
+    if name == "InMemoryTableScan":
+        return [jnode.relation().cachedPlan()]
+    kids = jnode.children()
+    return [kids.apply(i) for i in range(kids.size())]
 
-    return walk(df._jdf.queryExecution().executedPlan())
+
+def physical_nodes(df: DataFrame, node_name: str) -> list:
+    """Every physical-plan node (py4j handle) whose ``nodeName`` equals
+    ``node_name`` ("Generate", "Window", ...), found by walking the
+    plan TREE — robust to explain-formatter changes that break
+    plan-string substring pins. Walks through AQE and cache wrappers
+    (:func:`_children`), so the result is the same before and after
+    the plan runs, and a persisted subtree is walked at each scan of
+    its cache.
+    """
+    found = []
+
+    def walk(jnode) -> None:
+        if jnode.nodeName() == node_name:
+            found.append(jnode)
+        for k in _children(jnode):
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def count_physical_nodes(df: DataFrame, node_name: str) -> int:
+    """How many :func:`physical_nodes` are named ``node_name``."""
+    return len(physical_nodes(df, node_name))
 
 
 #: physical nodes that provably bound the row count flowing into any
 #: operator above them: grouped aggregates emit |groups| rows (the
 #: bounded-cells argument every global-window site relies on) and
-#: limit-family nodes emit <= k rows.
+#: global limit-family nodes emit <= k rows (``LocalLimit`` bounds
+#: rows per partition only, so it is not one).
 _BOUNDING_NODES = (
     "HashAggregate", "ObjectHashAggregate", "SortAggregate",
-    "TakeOrderedAndProject", "CollectLimit", "GlobalLimit", "LocalLimit",
+    "TakeOrderedAndProject", "CollectLimit", "GlobalLimit",
 )
 
 
@@ -133,7 +152,7 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
     #5). Global windows over grouped aggregates (bounded cells: bins,
     nations, blocks, top-k frames) are the deliberate, audited pattern
     and pass. Walks the tree via py4j (robust to formatter changes),
-    descending into AQE wrappers and cached relations.
+    through AQE and cache wrappers (:func:`_children`).
     """
     offenders: list[str] = []
 
@@ -141,37 +160,16 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
         name = jnode.nodeName()
         if any(name.startswith(b) for b in _BOUNDING_NODES):
             return True
-        if name == "AdaptiveSparkPlan":
-            return bounded_below(jnode.executedPlan())
-        if name == "InMemoryTableScan":
-            try:
-                return bounded_below(jnode.relation().cachedPlan())
-            except Exception:
-                return False
-        kids = jnode.children()
         # every input branch must be bounded for the window input to be
-        for i in range(kids.size()):
-            if not bounded_below(kids.apply(i)):
-                return False
-        return kids.size() > 0
+        kids = _children(jnode)
+        return bool(kids) and all(bounded_below(k) for k in kids)
 
     def walk(jnode) -> None:
-        name = jnode.nodeName()
-        if name == "AdaptiveSparkPlan":
-            walk(jnode.executedPlan())
-            return
-        if name == "InMemoryTableScan":
-            try:
-                walk(jnode.relation().cachedPlan())
-            except Exception:
-                pass
-            return
-        if name == "Window" and jnode.partitionSpec().isEmpty():
-            if not bounded_below(jnode):
-                offenders.append(jnode.simpleString(200))
-        kids = jnode.children()
-        for i in range(kids.size()):
-            walk(kids.apply(i))
+        if (jnode.nodeName() == "Window" and jnode.partitionSpec().isEmpty()
+                and not bounded_below(jnode)):
+            offenders.append(jnode.simpleString(200))
+        for k in _children(jnode):
+            walk(k)
 
     walk(df._jdf.queryExecution().executedPlan())
     return offenders
@@ -185,22 +183,10 @@ def count_parquet_scans(df: DataFrame, path_fragment: str | None = None) -> int:
     persisted subtrees count once per cache definition.
     """
     def walk(jnode) -> int:
-        name = jnode.nodeName()
-        if name.startswith("Scan "):
+        if jnode.nodeName().startswith("Scan "):
             if path_fragment is None:
                 return 1
             return 1 if path_fragment in jnode.simpleString(300) else 0
-        if name == "AdaptiveSparkPlan":
-            return walk(jnode.executedPlan())
-        if name == "InMemoryTableScan":
-            try:
-                return walk(jnode.relation().cachedPlan())
-            except Exception:
-                return 0
-        n = 0
-        kids = jnode.children()
-        for i in range(kids.size()):
-            n += walk(kids.apply(i))
-        return n
+        return sum(walk(k) for k in _children(jnode))
 
     return walk(df._jdf.queryExecution().executedPlan())

@@ -163,19 +163,61 @@ def test_corpus_split_is_narrow_no_shuffle(spark):
 
 
 def test_corpus_shuffle_has_no_unpartitioned_data_window(spark):
-    """The global rank must come from the two-level bucket scheme: the
-    only window without partition keys is the one over the bounded
-    per-bucket count table (at most n_buckets rows), never over row
-    data. Detect by asserting every unpartitioned window sits above an
-    aggregate (the counts), not above the raw scan."""
-    import re
-
+    """The global rank must come from the hierarchical bucket scheme:
+    the window over row data is partitioned by the bucket column, and
+    the only window without partition keys orders the per-bucket count
+    table (an aggregate of at most n_buckets rows), never row data."""
     from ksql_query_tutorial_spark.extensions import corpus_shuffle
 
     df = corpus_shuffle(spark, SF_ORACLE)
-    plan = checks.formatted_plan(df)
-    # the data-bearing rank window is partitioned by the bucket column
-    assert re.search(r"row_number\(\).*windowspecdefinition\(__b", plan.replace("\n", " ")), plan
+    windows = checks.physical_nodes(df, "Window")
+    glob = [w for w in windows if w.partitionSpec().isEmpty()]
+    data = [w for w in windows if not w.partitionSpec().isEmpty()]
+    assert len(glob) == 1 and len(data) == 1, [w.toString() for w in windows]
+    assert checks.unbounded_global_windows(df) == []
+    bucket = glob[0].orderSpec().apply(0).child().name()
+    spec = data[0].partitionSpec()
+    assert [spec.apply(i).name() for i in range(spec.size())] == [bucket]
+
+
+def test_plan_walkers_see_through_executed_and_cached_plans(spark):
+    """The tree walkers must see the same plan before and after it runs
+    (AQE then hides the final plan under a leaf ``ResultQueryStage``)
+    and inside a materialised persist: an unaggregated global window is
+    flagged in all three states, and node and scan counts survive
+    execution."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from ksql_query_tutorial_spark.tables import load
+
+    def ranked():
+        return spark.range(100_000).withColumn(
+            "r", F.row_number().over(Window.orderBy("id"))
+        )
+
+    assert len(checks.unbounded_global_windows(ranked())) == 1
+    ran = ranked()
+    ran.collect()
+    assert len(checks.unbounded_global_windows(ran)) == 1
+    cached = ranked().persist()
+    try:
+        cached.count()
+        assert len(checks.unbounded_global_windows(cached.select("r"))) == 1
+    finally:
+        cached.unpersist()
+
+    per_source = load(spark, SF_ORACLE, "documents").groupBy("source").count()
+    per_source.collect()
+    assert checks.count_physical_nodes(per_source, "HashAggregate") == 2
+    assert checks.count_parquet_scans(per_source, "documents") == 1
+
+    # once run, AQE reuses the twin aggregate's exchange (ReusedExchange)
+    per_k = spark.range(10_000).groupBy((F.col("id") % 97).alias("k")).count()
+    twice = per_k.join(per_k.withColumnRenamed("count", "c2"), "k")
+    assert checks.count_physical_nodes(twice, "HashAggregate") == 4
+    twice.collect()
+    assert checks.count_physical_nodes(twice, "HashAggregate") == 4
 
 
 def test_text_quality_score_single_doc_keyed_shuffle(spark):
